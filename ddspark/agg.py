@@ -2,22 +2,25 @@
 
 The reference's ``add``/``merge``/``get_quantile_value``
 (``ddsketch/ddsketch.py:138-215``) map onto Spark's partial/final aggregation
-split, hand-built with Arrow-vectorized pandas UDFs because PySpark has no
-custom partial-merging UDAF:
+split.  Both engines end in the same pure-JVM finalizer,
+:func:`finalize_cells_sql`, which reads bucket cells
+``by... | _sgn _k _c [_s _mn _mx]``; they differ in how the cells are made:
 
-1. **partial** — :func:`build_partials`: ``mapInPandas`` over the scan;
-   each task turns its Arrow batches into *one sketch row per (group,
-   partition)* with tight NumPy kernels (``np.log2`` → ``np.bincount``).
-   This is the map-side combine: the shuffle that follows moves kilobyte
-   sketch rows, never raw values, so group skew in the input does not
-   translate into shuffle skew.
-2. **final** — :func:`merge_partials`: ``groupBy(keys).applyInPandas`` doing
-   the associative store merge (reference ``ddsketch.py:186-215``), with an
-   optional intermediate tree level (``fanin``) for very high partition
-   counts.
-3. **finalize** — :func:`finalize_quantiles`: per merged row, cumsum /
-   searchsorted quantile extraction (reference ``ddsketch.py:159-184``),
-   plus the exact count/sum/min/max/avg the sketch tracks.
+* **cells** (default) — :func:`build_cells`: bucket key and sign routing as
+  Catalyst expressions, Spark's hash aggregation to ``(group, sgn, key)``
+  cells.  No Python stage at all.
+* **kernel** — :func:`build_partials`: ``mapInPandas`` over the scan; each
+  task turns its Arrow batches into *one sketch row per (group,
+  partition)* with tight NumPy kernels (``np.log2`` → ``np.bincount``).
+  :func:`_state_cells` then explodes every state row into cells JVM-side.
+  DDSketch is fully mergeable — merging adds bucket counts key by key — so
+  the finalizer's per-group sum over cells IS the merge; the only Python
+  stage is the partial one.
+
+Merged state rows (``STATE_FIELDS``) come from :func:`sketch_agg`
+(``assemble_cells`` or the associative :func:`merge_partials`) and feed
+:func:`finalize_quantiles` when a caller asks for the state itself
+(``quantile_sketch(..., keep_state=True)``).
 
 The flagship entry point is :func:`quantile_sketch`.
 """
@@ -223,6 +226,64 @@ def merge_partials(
         .groupBy("_g")
         .applyInPandas(lambda pdf: _merge_fn([], cfg)(pdf), schema)
     )
+
+
+def _state_cells(
+    states: DataFrame, by: list[str] | None = None, cfg: SketchConfig | None = None
+) -> DataFrame:
+    """Explode sketch-state rows (partial or merged) into bucket cells
+    ``by... | _sgn _k _c _s _mn _mx``, JVM-side — the input of
+    :func:`finalize_cells_sql`.
+
+    Each state row gives one zero cell carrying ``zero_count`` and the exact
+    stats, plus one cell per non-empty bin (key ``offset + i``, NULL stats).
+    No re-aggregation: the finalizer treats equal keys as one block (they
+    are adjacent in its window order and share one value), and a zero cell
+    with ``_c = 0`` is never the first bucket whose running count passes
+    the rank.  A state built with another ``gamma`` than ``cfg``'s fails
+    the query, as :func:`merge_partials` does.
+    """
+    by = list(by or [])
+    cfg = cfg or SketchConfig()
+
+    def build():
+        null = F.lit(None).cast("double")
+
+        def bins(sgn: int, off: str, arr: str):
+            cells = F.transform(
+                F.col(arr),
+                lambda c, i: F.struct(
+                    F.lit(sgn).alias("_sgn"),
+                    (F.col(off) + i).alias("_k"),
+                    c.alias("_c"),
+                    null.alias("_s"),
+                    null.alias("_mn"),
+                    null.alias("_mx"),
+                ),
+            )
+            return F.filter(cells, lambda cell: cell["_c"] > 0)
+
+        msg = f"Cannot merge DDSketches with different parameters: {cfg.gamma!r} vs "
+        zero_count = F.when(F.col("gamma") == cfg.gamma, F.col("zero_count")).otherwise(
+            F.raise_error(F.concat(F.lit(msg), F.col("gamma").cast("string")))
+        )
+        zero = F.struct(
+            F.lit(0).alias("_sgn"),
+            F.lit(0).cast("long").alias("_k"),
+            zero_count.alias("_c"),
+            F.col("sum").alias("_s"),
+            F.col("min").alias("_mn"),
+            F.col("max").alias("_mx"),
+        )
+        return F.inline(
+            F.concat(
+                F.array(zero),
+                bins(1, "pos_offset", "pos_bins"),
+                bins(-1, "neg_offset", "neg_bins"),
+            )
+        )
+
+    return states.select(*by, _cached_cols(("state_cells", cfg.gamma), build))
 
 
 _COLUMN_CACHE: dict[tuple, object] = {}
@@ -931,7 +992,9 @@ def finalize_quantiles(
 ) -> DataFrame:
     """Quantile extraction + exact stats from merged sketch rows.
 
-    Output: ``by... | count sum min max avg | p50 p95 ... [| state...]``.
+    Output: ``by... | count sum min max avg | p50 p95 ... [| state...]``;
+    ``keep_state`` appends the state fields not already among the stats, so
+    each output row round-trips through :meth:`Sketch.from_state`.
     """
     by = list(by or [])
     cfg = cfg or SketchConfig()
@@ -948,7 +1011,8 @@ def finalize_quantiles(
         + [StructField(c, DoubleType()) for c in q_cols]
     )
     if keep_state:
-        fields += STATE_FIELDS
+        names = {f.name for f in fields}
+        fields += [f for f in STATE_FIELDS if f.name not in names]
     schema = StructType(fields)
 
     def fin(batches):
@@ -994,8 +1058,9 @@ def sketch_agg(
       cells.  Fastest and most scalable: no raw row crosses the JVM/Python
       boundary.
     * ``kernel`` — Arrow-batch NumPy kernels per partition (mapInPandas) +
-      associative applyInPandas merge.  Required for interpolated mappings
-      and when per-partition partials/lineage are needed (checkpointing).
+      associative applyInPandas merge.  The independent Arrow cross-check of
+      the cells engine; its per-partition partials carry the lineage
+      checkpointing keys on.
     """
     by = list(by or [])
     cfg = cfg or SketchConfig()
@@ -1017,7 +1082,6 @@ def quantile_sketch(
     qs: list[float] = (0.5, 0.95, 0.99),
     cfg: SketchConfig | None = None,
     weight_col: str | None = None,
-    fanin: int | None = None,
     keep_state: bool = False,
     engine: str = "auto",
     exact_stats: bool = True,
@@ -1032,6 +1096,11 @@ def quantile_sketch(
     ``exact_stats=False`` (cells engine only) omits sum/min/max/avg and
     halves the per-cell state — the lean shape for quantiles-only jobs at
     very high group cardinality.
+
+    Both engines finalize in the JVM (:func:`finalize_cells_sql`); the
+    kernel engine feeds it the cells of its partial states
+    (:func:`_state_cells`).  ``keep_state=True`` needs merged states, so it
+    takes the :func:`sketch_agg` + :func:`finalize_quantiles` path instead.
     """
     from .plancache import lookup, source_key, store
 
@@ -1053,23 +1122,25 @@ def quantile_sketch(
             "quantile_sketch", value_col, tuple(by),
             tuple(float(q) for q in qs),
             cfg.relative_accuracy, cfg.mapping, cfg.mode, cfg.bin_limit,
-            cfg.offset, weight_col, fanin, keep_state, engine, exact_stats,
+            cfg.offset, weight_col, keep_state, engine, exact_stats,
         )
         hit = lookup(key, df.sparkSession)
         if hit is not None:
             return hit
-    if engine == "cells" and not keep_state:
+    if keep_state:
+        merged = sketch_agg(df, value_col, by, cfg, weight_col, engine=engine)
+        return store(key, finalize_quantiles(merged, list(qs), cfg, by, keep_state=True))
+    if engine == "cells":
         # fully-fused JVM path: key expressions, partial aggregation AND the
         # quantile finalizer all run inside Catalyst/Tungsten — zero Python
         # stages, so group cardinality only costs window+agg work, never
         # interpreter dispatch (at 10^6 groups this is ~10x the Arrow path)
         cells = build_cells(df, value_col, by, cfg, weight_col, stats=exact_stats)
-        return store(key, finalize_cells_sql(cells, list(qs), by, cfg))
-    merged = sketch_agg(df, value_col, by, cfg, weight_col, fanin=fanin, engine=engine)
-    out = finalize_quantiles(merged, list(qs), cfg, by, keep_state=keep_state)
-    return store(
-        key, out.drop("_g") if not by and "_g" in out.columns else out
-    )
+    else:
+        # the partial stage is the only Python one: the shuffle carries the
+        # exploded cells, and their per-group sum in the finalizer is the merge
+        cells = _state_cells(build_partials(df, value_col, by, cfg, weight_col), by, cfg)
+    return store(key, finalize_cells_sql(cells, list(qs), by, cfg))
 
 
 def quantile_sketch_multi(

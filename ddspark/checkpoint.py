@@ -13,7 +13,8 @@ Layout:
 
 Resume logic: list the input files, subtract the files recorded by
 *successful* attempts (lineage column ``_file``), process only the rest in
-a new attempt, then merge every attempt's partials.  Interrupted attempts
+a new attempt, then merge every attempt's partials (quantiles go straight
+from the partials' bucket cells to the JVM finalizer).  Interrupted attempts
 (no ``_SUCCESS``) are ignored and redone — per-row exactly-once falls out of
 file-granular idempotency, not task-level bookkeeping.
 """
@@ -26,7 +27,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .agg import build_partials, finalize_quantiles, merge_partials
+from .agg import _state_cells, build_partials, finalize_cells_sql, merge_partials
 from .sketch import SketchConfig
 
 __all__ = ["checkpointed_sketch_agg", "checkpointed_quantile_sketch", "attempts_info"]
@@ -63,25 +64,18 @@ def _completed_files(ckpt_dir: str) -> set[str]:
     return done
 
 
-def checkpointed_sketch_agg(
+def _checkpointed_partials(
     spark: SparkSession,
     input_path: str,
     value_expr: str,
-    by: list[str] | None = None,
-    cfg: SketchConfig | None = None,
-    ckpt_dir: str = "",
-    weight_col: str | None = None,
-    max_files: int | None = None,
+    by: list[str],
+    cfg: SketchConfig,
+    ckpt_dir: str,
+    weight_col: str | None,
+    max_files: int | None,
 ) -> DataFrame:
-    """Resumable grouped sketch over a parquet table.
-
-    ``value_expr`` may be any column expression (e.g. ``length(content)``).
-    ``max_files`` caps how many input files this invocation processes —
-    callers can budget work per run and resume later; the return value is
-    the merge of *all* checkpointed partials so far.
-    """
-    by = list(by or [])
-    cfg = cfg or SketchConfig()
+    """Run the next attempt (if any input file is left) and return the
+    partial rows of every completed attempt, ``_file`` dropped."""
     if not ckpt_dir:
         raise ValueError("ckpt_dir is required")
     os.makedirs(ckpt_dir, exist_ok=True)
@@ -149,7 +143,31 @@ def checkpointed_sketch_agg(
     ]
     if not good:
         raise ValueError(f"no completed attempts under {ckpt_dir}")
-    partials = spark.read.parquet(*good).drop("_file")
+    return spark.read.parquet(*good).drop("_file")
+
+
+def checkpointed_sketch_agg(
+    spark: SparkSession,
+    input_path: str,
+    value_expr: str,
+    by: list[str] | None = None,
+    cfg: SketchConfig | None = None,
+    ckpt_dir: str = "",
+    weight_col: str | None = None,
+    max_files: int | None = None,
+) -> DataFrame:
+    """Resumable grouped sketch over a parquet table.
+
+    ``value_expr`` may be any column expression (e.g. ``length(content)``).
+    ``max_files`` caps how many input files this invocation processes —
+    callers can budget work per run and resume later; the return value is
+    the merge of *all* checkpointed partials so far.
+    """
+    by = list(by or [])
+    cfg = cfg or SketchConfig()
+    partials = _checkpointed_partials(
+        spark, input_path, value_expr, by, cfg, ckpt_dir, weight_col, max_files
+    )
     return merge_partials(partials, by, cfg)
 
 
@@ -164,10 +182,11 @@ def checkpointed_quantile_sketch(
     weight_col: str | None = None,
     max_files: int | None = None,
 ) -> DataFrame:
+    """:func:`checkpointed_sketch_agg`, finalized to
+    ``by... | count sum min max avg | p...`` without a merge stage."""
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    merged = checkpointed_sketch_agg(
+    partials = _checkpointed_partials(
         spark, input_path, value_expr, by, cfg, ckpt_dir, weight_col, max_files
     )
-    out = finalize_quantiles(merged, list(qs), cfg, by)
-    return out.drop("_g") if not by and "_g" in out.columns else out
+    return finalize_cells_sql(_state_cells(partials, by, cfg), list(qs), by, cfg)
