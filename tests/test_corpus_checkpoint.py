@@ -5,7 +5,6 @@ from __future__ import annotations
 import hashlib
 import os
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -87,13 +86,8 @@ def test_checkpoint_resume_matches_direct(spark, tmp_path, corpus_pdf):
     want = direct.sort_values("lang").reset_index(drop=True)
     assert list(got["lang"]) == list(want["lang"])
     assert list(got["count"]) == list(want["count"])
-    # same bucket keys; the checkpointed path finalizes in NumPy while the
-    # fused direct path finalizes in JVM pow — last-ulp agreement
-    import numpy as np
-
-    assert np.allclose(
-        got[quantile_label(0.5)], want[quantile_label(0.5)], rtol=1e-12
-    )
+    # both paths finalize the same bucket cells in finalize_cells_sql
+    assert list(got[quantile_label(0.5)]) == list(want[quantile_label(0.5)])
 
 
 def test_interrupted_attempt_is_ignored(spark, tmp_path):
